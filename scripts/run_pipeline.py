@@ -31,14 +31,7 @@ import argparse
 import json
 import sys
 
-
-TIER_UNITS = {
-    "second": (1, "second"),
-    "minute": (1, "minute"),
-    "hour": (1, "hour"),
-    "day": (1, "day"),
-    "week": (1, "week"),
-}
+from tablecloth_time_spark.operators.rollup import TIER_UNITS
 
 DEFAULT_AGGS = {
     "n_turns": ("count", "turn_idx"),
@@ -81,6 +74,31 @@ def _parse_retention(spec: str | None) -> dict[str, int]:
         tier, _, days = part.strip().partition("=")
         out[tier] = int(days)
     return out
+
+
+def derive_text_len(df):
+    """Add ``text_len`` (the ``sum_chars`` source) to raw transcripts."""
+    from pyspark.sql import functions as F
+
+    if "text_len" not in df.columns and "text" in df.columns:
+        return df.withColumn("text_len", F.length("text").cast("long"))
+    return df
+
+
+def _continuous(spark, args, source_root, retention, tiers, order_cols):
+    from tablecloth_time_spark.plans.continuous import ContinuousAggregate, TierSpec
+    from tablecloth_time_spark.plans.snapshots import SnapshotTable
+
+    return ContinuousAggregate(
+        spark, SnapshotTable(spark, source_root), args.output, [args.key],
+        args.ts_col, DEFAULT_AGGS,
+        tiers=tuple(
+            TierSpec(t, *TIER_UNITS[t], retention_days=retention.get(t))
+            for t in tiers
+        ),
+        order_cols=order_cols,
+        prepare=derive_text_len,
+    )
 
 
 def main(argv=None) -> None:
@@ -136,7 +154,6 @@ def main(argv=None) -> None:
         return
 
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     preexisting = SparkSession.getActiveSession() is not None
     builder = SparkSession.builder.appName("tts-pipeline").config(
@@ -151,14 +168,14 @@ def main(argv=None) -> None:
     report: dict = {"mode": args.mode, "tiers": {}}
 
     if args.mode == "full":
-        from tablecloth_time_spark.operators.compress import compress_series
-        from tablecloth_time_spark.operators.rollup import rollup_cascade
+        from tablecloth_time_spark.operators.compress import block_stats, compress_series
+        from tablecloth_time_spark.operators.rollup import (
+            finalize_partials,
+            partial_cascade,
+        )
 
-        df = spark.read.parquet(args.input)
-        if "text_len" not in df.columns and "text" in df.columns:
-            df = df.withColumn("text_len", F.length("text").cast("long"))
-        out = rollup_cascade(
-            df,
+        partials = partial_cascade(
+            derive_text_len(spark.read.parquet(args.input)),
             [args.key],
             args.ts_col,
             DEFAULT_AGGS,
@@ -166,60 +183,46 @@ def main(argv=None) -> None:
             order_cols=order_cols,
             salt=args.salt,
         )
-        for tier, tdf in out.items():
-            path = f"{args.output}/tiers/{tier}"
-            # sorted by (bucket, key): parquet min-max stats then prune
-            # slice queries on bucket ranges — the distributed analogue of
-            # the reference's sorted-column binary search
-            (
-                tdf.repartitionByRange(64, "bucket")
-                .sortWithinPartitions("bucket", args.key)
-                .write.mode("overwrite")
-                .parquet(path)
-            )
-            report["tiers"][tier] = spark.read.parquet(path).count()
-        if args.compress_tier:
-            blocks = compress_series(
-                out[args.compress_tier],
-                ts_col="bucket",
-                value_cols={"n_turns": "int", "sum_chars": "int"},
-                key_col=args.key,
-                block_unit="day",
-            )
-            bpath = f"{args.output}/blocks/{args.compress_tier}"
-            blocks.write.mode("overwrite").parquet(bpath)
-            s = spark.read.parquet(bpath).agg(
-                F.sum("raw_bytes").alias("raw"), F.sum("enc_bytes").alias("enc"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()[0]
-            report["compression"] = {
-                "n_blocks": s["n"],
-                "ratio": round(s["raw"] / s["enc"], 3) if s["enc"] else None,
-            }
+        out = {
+            t: finalize_partials(p, [args.key], DEFAULT_AGGS)
+            for t, p in partials.items()
+        }
+        try:
+            for tier, tdf in out.items():
+                path = f"{args.output}/tiers/{tier}"
+                # sorted by (bucket, key): parquet min-max stats then prune
+                # slice queries on bucket ranges — the distributed analogue
+                # of the reference's sorted-column binary search
+                (
+                    tdf.repartitionByRange(64, "bucket")
+                    .sortWithinPartitions("bucket", args.key)
+                    .write.mode("overwrite")
+                    .parquet(path)
+                )
+                report["tiers"][tier] = spark.read.parquet(path).count()
+            if args.compress_tier:
+                blocks = compress_series(
+                    out[args.compress_tier],
+                    ts_col="bucket",
+                    value_cols={"n_turns": "int", "sum_chars": "int"},
+                    key_col=args.key,
+                    block_unit="day",
+                )
+                bpath = f"{args.output}/blocks/{args.compress_tier}"
+                blocks.write.mode("overwrite").parquet(bpath)
+                s = block_stats(spark.read.parquet(bpath))
+                report["compression"] = {
+                    "n_blocks": s["n_blocks"],
+                    "ratio": s["compression_ratio"],
+                }
+        finally:
+            # the cascade's finest partial is cached: release it on every exit
+            next(iter(partials.values())).unpersist()
 
     elif args.mode == "incremental":
-        from tablecloth_time_spark.plans.continuous import (
-            ContinuousAggregate,
-            TierSpec,
-        )
-        from tablecloth_time_spark.plans.snapshots import SnapshotTable
-
-        retention = _parse_retention(args.retention)
-
-        def derive_text_len(df):
-            if "text_len" not in df.columns and "text" in df.columns:
-                return df.withColumn("text_len", F.length("text").cast("long"))
-            return df
-
-        src = SnapshotTable(spark, args.source_table)
-        ca = ContinuousAggregate(
-            spark, src, args.output, [args.key], args.ts_col, DEFAULT_AGGS,
-            tiers=tuple(
-                TierSpec(t, *TIER_UNITS[t], retention_days=retention.get(t))
-                for t in tiers
-            ),
-            order_cols=order_cols,
-            prepare=derive_text_len,
+        ca = _continuous(
+            spark, args, args.source_table, _parse_retention(args.retention),
+            tiers, order_cols,
         )
         run = ca.refresh()
         report["run"] = {
@@ -231,12 +234,6 @@ def main(argv=None) -> None:
         }
 
     elif args.mode == "expire":
-        from tablecloth_time_spark.plans.continuous import (
-            ContinuousAggregate,
-            TierSpec,
-        )
-        from tablecloth_time_spark.plans.snapshots import SnapshotTable
-
         if not args.as_of:
             raise SystemExit("expire mode requires --as-of YYYY-MM-DD")
         retention = _parse_retention(args.retention)
@@ -245,14 +242,9 @@ def main(argv=None) -> None:
                 "expire mode requires --retention (e.g. 'minute=90,hour=365')"
                 " — without it every tier is kept forever and expiry is a noop"
             )
-        src = SnapshotTable(spark, args.source_table or args.output)
-        ca = ContinuousAggregate(
-            spark, src, args.output, [args.key], args.ts_col, DEFAULT_AGGS,
-            tiers=tuple(
-                TierSpec(t, *TIER_UNITS[t], retention_days=retention.get(t))
-                for t in tiers
-            ),
-            order_cols=order_cols,
+        ca = _continuous(
+            spark, args, args.source_table or args.output, retention, tiers,
+            order_cols,
         )
         report["expired"] = ca.expire(args.as_of)
 

@@ -9,8 +9,8 @@ applies ``fn`` to each complete group inside whole Arrow batches. A group
 that spans an Arrow batch boundary is held back (``pending``) until its
 remaining rows arrive — correctness does not depend on batch size.
 
-Used by gapfill's interpolation kernels; operators/compress.py uses the
-same pattern with a fully-numpy kernel inlined.
+Both users run that loop, :func:`stream_group_runs`: gapfill's kernels per
+group (grouped_apply_stream), operators/compress.py's encoder per slab.
 """
 
 from __future__ import annotations
@@ -38,6 +38,40 @@ def stream_nparts(spark, npartitions: int | None = None) -> int:
     )
 
 
+def stream_group_runs(
+    batches: Iterator[pd.DataFrame], group_cols: list[str],
+    fn: Callable[[pd.DataFrame], pd.DataFrame | None],
+) -> Iterator[pd.DataFrame]:
+    """Yield ``fn(run)`` (unless None) per run of COMPLETE groups, rows
+    arriving contiguous by ``group_cols``; each batch's last group waits
+    for the next batch (null-safe tail comparison)."""
+    pending: pd.DataFrame | None = None
+    for pdf in batches:
+        if pending is not None and len(pending):
+            pdf = pd.concat([pending, pdf], ignore_index=True)
+            pending = None
+        if not len(pdf):
+            continue
+        tail = np.ones(len(pdf), dtype=bool)
+        for c in group_cols:
+            last = pdf[c].iloc[-1]
+            if pd.isna(last):  # NaN != NaN — null-safe tail comparison
+                tail &= pdf[c].isna().to_numpy()
+            else:
+                tail &= (pdf[c] == last).to_numpy()
+        not_tail = np.flatnonzero(~tail)
+        cut = int(not_tail[-1]) + 1 if len(not_tail) else 0
+        pending = pdf.iloc[cut:]
+        if cut:
+            out = fn(pdf.iloc[:cut])
+            if out is not None:
+                yield out
+    if pending is not None and len(pending):
+        out = fn(pending)
+        if out is not None:
+            yield out
+
+
 def grouped_apply_stream(
     df: DataFrame,
     group_cols: list[str],
@@ -47,11 +81,7 @@ def grouped_apply_stream(
     npartitions: int | None = None,
 ) -> DataFrame:
     """Apply ``fn`` once per (group_cols) group; rows arrive sorted by
-    ``sort_cols`` within each group. ``schema`` is the output schema.
-
-    (A ``whole_batch`` slab mode existed while the ewma Arrow kernel
-    needed cross-group vectorization; the r4 pure-window ewma retired its
-    only caller, so the mode was removed rather than kept untested.)"""
+    ``sort_cols`` within each group. ``schema`` is the output schema."""
     spark = df.sparkSession
     nparts = stream_nparts(spark, npartitions)
     part = df.repartition(nparts, *group_cols).sortWithinPartitions(
@@ -69,30 +99,6 @@ def grouped_apply_stream(
         return pd.concat(outs, ignore_index=True) if outs else None
 
     def stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None and len(pending):
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if not len(pdf):
-                continue
-            tail = np.ones(len(pdf), dtype=bool)
-            for c in group_cols:
-                last = pdf[c].iloc[-1]
-                if pd.isna(last):  # NaN != NaN — null-safe tail comparison
-                    tail &= pdf[c].isna().to_numpy()
-                else:
-                    tail &= (pdf[c] == last).to_numpy()
-            not_tail = np.flatnonzero(~tail)
-            cut = int(not_tail[-1]) + 1 if len(not_tail) else 0
-            pending = pdf.iloc[cut:]
-            if cut:
-                out = apply_groups(pdf.iloc[:cut])
-                if out is not None:
-                    yield out
-        if pending is not None and len(pending):
-            out = apply_groups(pending)
-            if out is not None:
-                yield out
+        return stream_group_runs(batches, group_cols, apply_groups)
 
     return part.mapInPandas(stream, schema)

@@ -66,6 +66,7 @@ from tablecloth_time_spark.functions.units import (
     milliseconds_in,
     normalize_unit,
 )
+from tablecloth_time_spark.operators._grouped import stream_group_runs, stream_nparts
 
 _U64 = np.uint64
 _MASK64 = _U64(0xFFFFFFFFFFFFFFFF)
@@ -616,28 +617,9 @@ def compress_series(
         return pd.DataFrame(out)
 
     def encode_stream(batches):
-        # Groups arrive contiguous and ordered (repartition + sortWithin
-        # Partitions below), but an Arrow batch boundary can split a group;
-        # hold the final group of each batch until the next batch arrives.
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None and len(pending):
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if not len(pdf):
-                continue
-            last_key = pdf["__key"].iloc[-1]
-            last_blk = pdf["__block"].iloc[-1]
-            tail = (
-                (pdf["__key"] == last_key) & (pdf["__block"] == last_blk)
-            ).to_numpy()
-            not_tail = np.where(~tail)[0]
-            cut = int(not_tail[-1]) + 1 if len(not_tail) else 0
-            pending = pdf.iloc[cut:]
-            if cut:
-                yield encode_groups(pdf.iloc[:cut])
-        if pending is not None and len(pending):
-            yield encode_groups(pending)
+        # groups arrive contiguous and ordered (repartition + sortWithin
+        # Partitions below); each run of complete groups is one slab
+        return stream_group_runs(batches, ["__key", "__block"], encode_groups)
 
     prepared = df.select(
         F.col(key_col).cast("string").alias("__key"),
@@ -656,14 +638,30 @@ def compress_series(
     spark = df.sparkSession
     # >=4 task waves so JVM Arrow serialization pipelines with the Python
     # encode kernel instead of alternating in lockstep
-    from tablecloth_time_spark.operators._grouped import stream_nparts
-
     nparts = stream_nparts(spark)
     shuffle_cols = ["__key", "__block"] if skew_split else ["__key"]
     part = prepared.repartition(nparts, *shuffle_cols).sortWithinPartitions(
         "__key", "__block", *[f"__o{i}" for i in range(n_sort)]
     )
     return part.mapInPandas(encode_stream, schema)
+
+
+def block_stats(blocks: DataFrame) -> dict:
+    """Totals of a blocks table: ``n_blocks``, ``raw_bytes``, ``enc_bytes``
+    and their ``compression_ratio``. Read them from blocks already
+    written, so the encode kernel runs once."""
+    s = blocks.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("raw_bytes").alias("raw"),
+        F.sum("enc_bytes").alias("enc"),
+    ).collect()[0]
+    raw, enc = int(s["raw"] or 0), int(s["enc"] or 0)
+    return {
+        "n_blocks": int(s["n"]),
+        "raw_bytes": raw,
+        "enc_bytes": enc,
+        "compression_ratio": round(raw / enc, 3) if enc else None,
+    }
 
 
 def decompress_blocks(

@@ -8,9 +8,10 @@ that composition, made distributed and skew-safe:
 - the bucket key is ``down_to_nearest(ts, interval, unit)`` — pure codegen;
 - every aggregate is kept in a MERGEABLE partial form (count, sum, min, max,
   first/last as lexicographic min/max over an order struct, avg as
-  (sum, count)), so tiers cascade: second -> minute -> hour -> day each
-  re-merge the tier below instead of re-scanning raw data — at 100 TB the
-  raw table is read ONCE for all tiers;
+  (sum, count)), so tiers cascade: :func:`partial_cascade`, the one tier
+  cascade (batch ``rollup_cascade`` and plans/continuous.py both use it),
+  re-merges the finest tier's partial into every coarser tier instead of
+  re-scanning raw data — at 100 TB the raw table is read ONCE for all tiers;
 - optional explicit salting splits a mega-series (conv_id with 10^8 turns)
   across ``salt`` sub-groups before the final merge (two-phase partial/final
   aggregation). Spark's map-side partial hash aggregation already bounds
@@ -127,6 +128,20 @@ def _parse_aggs(aggs: dict[str, tuple[str, str]]) -> list[_Agg]:
 AGG_BUILDERS = ("count", "sum", "min", "max", "avg", "first", "last", "hll")
 
 
+def _partial(
+    df: DataFrame, keys: list[str], bucket: Column, aggs: dict[str, tuple[str, str]],
+    order_cols: list[str], salt: int, bucket_col: str,
+) -> DataFrame:
+    """Raw rows -> one tier's partial, grouped by (keys, ``bucket``);
+    ``salt > 1`` merges per-(keys, bucket, salt_id) partials (two-phase)."""
+    partial_exprs = [e for s in _parse_aggs(aggs) for e in s.partial_exprs(order_cols)]
+    if salt and salt > 1:
+        salt_id = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(salt))
+        p0 = df.groupBy(*keys, bucket, salt_id.alias("__salt")).agg(*partial_exprs)
+        return merge_partials(p0, keys, aggs, bucket_col)
+    return df.groupBy(*keys, bucket).agg(*partial_exprs)
+
+
 def rollup(
     df: DataFrame,
     keys: list[str],
@@ -155,20 +170,9 @@ def rollup(
     compute each zoned grain from raw data with its own rollup(zone=...)
     call instead.
     """
-    specs = _parse_aggs(aggs)
-    order_cols = order_cols or [ts_col]
     bucket = down_to_nearest(ts_col, interval, unit, zone=zone).alias(bucket_col)
-
-    partial_exprs = [e for s in specs for e in s.partial_exprs(order_cols)]
-    if salt and salt > 1:
-        salt_id = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(salt))
-        partial = df.groupBy(*keys, bucket, salt_id.alias("__salt")).agg(*partial_exprs)
-        merged = partial.groupBy(*keys, bucket_col).agg(
-            *[e for s in specs for e in s.merge_exprs()]
-        )
-    else:
-        merged = df.groupBy(*keys, bucket).agg(*partial_exprs)
-    return merged.select(*keys, bucket_col, *[s.final_expr() for s in specs])
+    partial = _partial(df, keys, bucket, aggs, order_cols or [ts_col], salt, bucket_col)
+    return finalize_partials(partial, keys, aggs, bucket_col)
 
 
 def hopping_rollup(
@@ -291,14 +295,53 @@ def ohlc(
     )
 
 
-# tier name -> (interval, unit); coarser tiers must be exact multiples of
-# finer ones for the cascade to be lossless
-DEFAULT_TIERS: dict[str, tuple[int, str]] = {
+# tier name -> (interval, unit): the one tier-grain table. Coarser tiers
+# must be exact multiples of finer ones for the cascade to be lossless.
+TIER_UNITS: dict[str, tuple[int, str]] = {
     "second": (1, "second"),
     "minute": (1, "minute"),
     "hour": (1, "hour"),
     "day": (1, "day"),
+    "week": (1, "week"),
 }
+
+DEFAULT_TIERS = {t: TIER_UNITS[t] for t in ("second", "minute", "hour", "day")}
+
+
+def partial_cascade(
+    df: DataFrame,
+    keys: list[str],
+    ts_col: str,
+    aggs: dict[str, tuple[str, str]],
+    tiers: dict[str, tuple[int, str]] | None = None,
+    order_cols: list[str] | None = None,
+    salt: int = 0,
+    bucket_col: str = BUCKET_COL,
+) -> dict[str, DataFrame]:
+    """The tier cascade in partial form: {tier_name: partial DataFrame},
+    finest first. Raw rows go to the finest tier's partial once; coarser
+    tiers re-merge it (sums of sums, min of struct-mins, ...). The finest
+    entry IS a cached frame: ``.unpersist()`` it once all tiers are used.
+    """
+    items = sorted(
+        (tiers or DEFAULT_TIERS).items(), key=lambda kv: _bucket_width_ms(*kv[1])
+    )
+    (finest, (fi, fu)), coarser = items[0], items[1:]
+    bucket = down_to_nearest(ts_col, fi, fu).alias(bucket_col)
+    partial = _partial(
+        df, keys, bucket, aggs, order_cols or [ts_col], salt, bucket_col
+    ).cache()
+
+    # every coarser tier re-merges the CACHED finest partial directly
+    # (sums of sums are associative, so finest -> day equals
+    # finest -> hour -> day). Chaining tier -> tier instead would make an
+    # all-tiers action recompute each intermediate merge once per coarser
+    # branch — Spark has no cross-branch common-subplan reuse beyond the
+    # explicit cache.
+    out = {finest: partial}
+    for tier_name, grain in coarser:
+        out[tier_name] = merge_partials(partial, keys, aggs, bucket_col, grain)
+    return out
 
 
 def rollup_cascade(
@@ -311,54 +354,15 @@ def rollup_cascade(
     salt: int = 0,
     bucket_col: str = BUCKET_COL,
 ) -> dict[str, DataFrame]:
-    """Cascading multi-tier rollup: raw -> finest tier, then tier -> tier.
-
-    Each coarser tier merges the PARTIAL representation of the tier below
-    (sums of sums, min of struct-mins, ...), so raw data is scanned once.
-    Returns {tier_name: finalized DataFrame}. The finest tier's partial
-    frame is cached so coarser tiers and the finalized view share the scan.
-    """
-    tiers = tiers or DEFAULT_TIERS
-    specs = _parse_aggs(aggs)
-    order_cols = order_cols or [ts_col]
-    items = sorted(
-        tiers.items(),
-        key=lambda kv: _bucket_width_ms(*kv[1]),
-    )
-
-    # finest tier: partial agg straight off the raw table
-    fi, fu = items[0][1]
-    fbucket = down_to_nearest(ts_col, fi, fu).alias(bucket_col)
-    partial_exprs = [e for s in specs for e in s.partial_exprs(order_cols)]
-    if salt and salt > 1:
-        salt_id = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(salt))
-        p0 = df.groupBy(*keys, fbucket, salt_id.alias("__salt")).agg(*partial_exprs)
-        partial = p0.groupBy(*keys, bucket_col).agg(
-            *[e for s in specs for e in s.merge_exprs()]
-        )
-    else:
-        partial = df.groupBy(*keys, fbucket).agg(*partial_exprs)
-    partial = partial.cache()
-
-    # every coarser tier re-merges the CACHED finest partial directly
-    # (sums of sums are associative, so finest -> day equals
-    # finest -> hour -> day). Chaining tier -> tier instead would make an
-    # all-tiers action recompute each intermediate merge once per coarser
-    # branch — Spark has no cross-branch common-subplan reuse beyond the
-    # explicit cache.
-    out: dict[str, DataFrame] = {}
-    for idx, (tier_name, (interval, unit)) in enumerate(items):
-        if idx == 0:
-            tier_partial = partial
-        else:
-            rebucket = down_to_nearest(bucket_col, interval, unit).alias(bucket_col)
-            tier_partial = partial.groupBy(*keys, rebucket).agg(
-                *[e for s in specs for e in s.merge_exprs()]
-            )
-        out[tier_name] = tier_partial.select(
-            *keys, bucket_col, *[s.final_expr() for s in specs]
-        )
-    return out
+    """:func:`partial_cascade`, finalized: {tier_name: DataFrame}. Its
+    cached finest partial is not released; callers that must release it
+    use ``partial_cascade`` + ``finalize_partials``."""
+    return {
+        name: finalize_partials(p, keys, aggs, bucket_col)
+        for name, p in partial_cascade(
+            df, keys, ts_col, aggs, tiers, order_cols, salt, bucket_col
+        ).items()
+    }
 
 
 def rollup_tiers_long(
@@ -397,14 +401,15 @@ def rollup_tiers_long(
     spreads across four Exchanges, in one.
 
     Use THIS when consuming all tiers in one action (bench, batch export,
-    write-partitioned-by-tier); ``rollup_multi`` wraps it as a per-tier
-    dict (each dict entry is a filter BRANCH — materializing all of them
-    separately recomputes the pass per tier, so materialize the long frame
-    once instead); ``rollup_cascade`` when tiers are materialized
-    independently; ``partial_rollup``/``merge_partials`` for incremental
-    maintenance. Mega-key skew: Expand preserves the key distribution;
-    pair with AQE or pre-salt if one (key, finest-bucket) group is
-    degenerate.
+    write-partitioned-by-tier) or when tiers bucket in a local ``zone``;
+    ``rollup_multi`` wraps it as a per-tier dict (each dict entry is a
+    filter BRANCH — materializing all of them separately recomputes the
+    pass per tier, so materialize the long frame once instead). Otherwise
+    use the tier cascade: ``rollup_cascade`` when tiers are materialized
+    independently, ``partial_cascade`` when the partials themselves are
+    kept (the continuous aggregate merges them into its state). Mega-key
+    skew: Expand preserves the key distribution; pair with AQE or pre-salt
+    if one (key, finest-bucket) group is degenerate.
     """
     tiers = tiers or DEFAULT_TIERS
     specs = _parse_aggs(aggs)
@@ -497,12 +502,8 @@ def partial_rollup(
     min/max, first/last order-structs) so later increments merge exactly —
     never the finalized form, where avg/first/last would be unmergeable.
     """
-    specs = _parse_aggs(aggs)
-    order_cols = order_cols or [ts_col]
     bucket = down_to_nearest(ts_col, interval, unit).alias(bucket_col)
-    return df.groupBy(*keys, bucket).agg(
-        *[e for s in specs for e in s.partial_exprs(order_cols)]
-    )
+    return _partial(df, keys, bucket, aggs, order_cols or [ts_col], 0, bucket_col)
 
 
 def merge_partials(

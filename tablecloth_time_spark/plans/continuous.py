@@ -20,9 +20,10 @@ Design (scale-first):
   10^12 turns with a 30-day hot window, a daily increment rewrites ~1/365th
   of each tier, not the tier. (On real Iceberg, stage-and-swap becomes the
   table format's atomic metadata commit.)
-- **One scan for all tiers.** The increment is partially aggregated once at
-  the finest tier; coarser tiers re-merge those partials (sums of sums) —
-  the same cascade as operators/rollup.rollup_cascade.
+- **One scan for all tiers.** Every tier's new partial comes from
+  operators/rollup.partial_cascade, the same cascade ``rollup_cascade``
+  finalizes: the increment is partially aggregated once at the finest
+  tier, and coarser tiers re-merge those partials (sums of sums).
 - **Checkpoint manifest + resume.** Every refresh appends a run record
   keyed by its snapshot range; each tier commit is recorded with row counts
   and dirty partitions AFTER its write lands. A crashed run resumes by
@@ -49,11 +50,13 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tablecloth_time_spark.operators.compress import compress_series
+from tablecloth_time_spark.operators.compress import block_stats, compress_series
 from tablecloth_time_spark.operators.rollup import (
+    TIER_UNITS,
+    _bucket_width_ms,
     finalize_partials,
     merge_partials,
-    partial_rollup,
+    partial_cascade,
 )
 from tablecloth_time_spark.plans.snapshots import SnapshotTable
 from tablecloth_time_spark.plans.tier_store import (
@@ -80,11 +83,9 @@ class TierSpec:
     retention_days: int | None = None  # None = keep forever
 
 
-DEFAULT_TIERS = (
-    TierSpec("second", 1, "second", retention_days=7),
-    TierSpec("minute", 1, "minute", retention_days=90),
-    TierSpec("hour", 1, "hour", retention_days=365),
-    TierSpec("day", 1, "day", retention_days=None),
+DEFAULT_TIERS = tuple(
+    TierSpec(name, *TIER_UNITS[name], retention_days=days)
+    for name, days in (("second", 7), ("minute", 90), ("hour", 365), ("day", None))
 )
 
 
@@ -117,7 +118,9 @@ class ContinuousAggregate:
         self.keys = keys
         self.ts_col = ts_col
         self.aggs = aggs
-        self.tiers = tuple(sorted(tiers, key=lambda t: _width_ms(t)))
+        self.tiers = tuple(
+            sorted(tiers, key=lambda t: _bucket_width_ms(t.interval, t.unit))
+        )
         self.order_cols = order_cols or [ts_col]
         self.compress = compress
         # optional DataFrame -> DataFrame hook applied to every increment
@@ -209,45 +212,44 @@ class ContinuousAggregate:
             m["last_snapshot"] = current
             self._commit_manifest(m)
             return run
-        finest = self.tiers[0]
-        finest_partial = partial_rollup(
-            inc, self.keys, self.ts_col, finest.interval, finest.unit,
-            self.aggs, self.order_cols,
-        ).cache()
-
-        for tier in self.tiers:
-            info = run["tiers"].get(tier.name, {})
-            if info.get("status") == "completed":
-                continue  # resume: this tier's merge already landed
-            if info.get("status") == "staged":
-                # resume mid-commit: the staged output is the FULL new
-                # content of the dirty partitions (not a delta), so
-                # replaying the swap is idempotent — no double count
+        partials = partial_cascade(
+            inc, self.keys, self.ts_col, self.aggs,
+            {t.name: (t.interval, t.unit) for t in self.tiers}, self.order_cols,
+        )
+        try:
+            for tier in self.tiers:
+                info = run["tiers"].get(tier.name, {})
+                if info.get("status") == "completed":
+                    continue  # resume: this tier's merge already landed
+                if info.get("status") == "staged":
+                    # resume mid-commit: the staged output is the FULL new
+                    # content of the dirty partitions (not a delta), so
+                    # replaying the swap is idempotent — no double count
+                    self.store.commit(tier.name, info)
+                    info["status"] = "completed"
+                    self._commit_manifest(m)
+                    continue
+                info = self._stage_tier(tier, partials[tier.name], run_id)
+                info["status"] = "staged"
+                run["tiers"][tier.name] = info
+                self._commit_manifest(m)
+                if fail_after_tier == f"stage:{tier.name}":
+                    raise RuntimeError(
+                        f"injected failure after staging tier {tier.name}"
+                    )
                 self.store.commit(tier.name, info)
                 info["status"] = "completed"
                 self._commit_manifest(m)
-                continue
-            info = self._stage_tier(tier, finest_partial, run_id)
-            info["status"] = "staged"
-            run["tiers"][tier.name] = info
-            self._commit_manifest(m)
-            if fail_after_tier == f"stage:{tier.name}":
-                finest_partial.unpersist()
-                raise RuntimeError(
-                    f"injected failure after staging tier {tier.name}"
-                )
-            self.store.commit(tier.name, info)
-            info["status"] = "completed"
-            self._commit_manifest(m)
-            if fail_after_tier == tier.name:
-                finest_partial.unpersist()
-                raise RuntimeError(f"injected failure after tier {tier.name}")
+                if fail_after_tier == tier.name:
+                    raise RuntimeError(f"injected failure after tier {tier.name}")
 
-        if self.compress is not None and run.get("compression") is None:
-            run["compression"] = self._refresh_blocks(run)
-            self._commit_manifest(m)
+            if self.compress is not None and run.get("compression") is None:
+                run["compression"] = self._refresh_blocks(run)
+                self._commit_manifest(m)
+        finally:
+            # the cascade's finest partial is cached: release it on every exit
+            partials[self.tiers[0].name].unpersist()
 
-        finest_partial.unpersist()
         run["status"] = "completed"
         run["rows_in"] = rows_in
         m["last_snapshot"] = current
@@ -255,7 +257,7 @@ class ContinuousAggregate:
         return run
 
     def _stage_tier(
-        self, tier: TierSpec, finest_partial: DataFrame, run_id: str
+        self, tier: TierSpec, new_partial: DataFrame, run_id: str
     ) -> dict:
         """Compute the FULL new content of every dirty partition and hand
         it to the store's stage. Staging (expensive, recomputable) is
@@ -263,10 +265,7 @@ class ContinuousAggregate:
         swap) so a crash at any point either recomputes the stage or
         replays the swap — the increment can never be merged into live
         state twice."""
-        new_partial = merge_partials(
-            finest_partial, self.keys, self.aggs,
-            rebucket=(tier.interval, tier.unit),
-        ).withColumn(P_DATE, F.date_format(BUCKET, "yyyy-MM-dd"))
+        new_partial = new_partial.withColumn(P_DATE, F.date_format(BUCKET, "yyyy-MM-dd"))
 
         dirty = [r[0] for r in new_partial.select(P_DATE).distinct().collect()]
         if self.store.tier_exists(tier.name):
@@ -296,21 +295,10 @@ class ContinuousAggregate:
             key_col=self.keys[0],
             block_unit="day",
         ).withColumn(P_DATE, F.date_format("block_start", "yyyy-MM-dd"))
-        stats = blocks.agg(
-            F.sum("raw_bytes").alias("raw"),
-            F.sum("enc_bytes").alias("enc"),
-            F.count(F.lit(1)).alias("n_blocks"),
-        ).collect()[0]
+        # encode once: the stats come from the partitions just written
         self.store.write_blocks(spec.tier, blocks)
-        raw, enc = int(stats["raw"] or 0), int(stats["enc"] or 0)
-        return {
-            "tier": spec.tier,
-            "dirty_partitions": dirty,
-            "n_blocks": int(stats["n_blocks"]),
-            "raw_bytes": raw,
-            "enc_bytes": enc,
-            "compression_ratio": round(raw / enc, 3) if enc else None,
-        }
+        written = self.store.read_blocks(spec.tier).filter(F.col(P_DATE).isin(dirty))
+        return {"tier": spec.tier, "dirty_partitions": dirty, **block_stats(written)}
 
     # -- reads --------------------------------------------------------------
 
@@ -352,9 +340,3 @@ class ContinuousAggregate:
         )
         self._commit_manifest(m)
         return expired
-
-
-def _width_ms(t: TierSpec) -> int:
-    from tablecloth_time_spark.operators.rollup import _bucket_width_ms
-
-    return _bucket_width_ms(t.interval, t.unit)
