@@ -192,9 +192,12 @@ def main(argv=None) -> None:
                 path = f"{args.output}/tiers/{tier}"
                 # sorted by (bucket, key): parquet min-max stats then prune
                 # slice queries on bucket ranges — the distributed analogue
-                # of the reference's sorted-column binary search
+                # of the reference's sorted-column binary search. No
+                # partition count: AQE merges adjacent ranges, so file count
+                # follows data size, not a constant (each write task has a
+                # fixed cost; operators/_grouped.py has the measurement)
                 (
-                    tdf.repartitionByRange(64, "bucket")
+                    tdf.repartitionByRange("bucket")
                     .sortWithinPartitions("bucket", args.key)
                     .write.mode("overwrite")
                     .parquet(path)

@@ -66,7 +66,7 @@ from tablecloth_time_spark.functions.units import (
     milliseconds_in,
     normalize_unit,
 )
-from tablecloth_time_spark.operators._grouped import stream_group_runs, stream_nparts
+from tablecloth_time_spark.operators._grouped import stream_group_runs
 
 _U64 = np.uint64
 _MASK64 = _U64(0xFFFFFFFFFFFFFFFF)
@@ -634,13 +634,12 @@ def compress_series(
     # fixes both group contiguity and the intra-series (order_cols) order,
     # so the kernel streams whole Arrow batches instead of paying the
     # per-group applyInPandas round-trip (matters at millions of small
-    # blocks: ~20x fewer Python crossings)
-    spark = df.sparkSession
-    # >=4 task waves so JVM Arrow serialization pipelines with the Python
-    # encode kernel instead of alternating in lockstep
-    nparts = stream_nparts(spark)
+    # blocks: ~20x fewer Python crossings). No partition count: each
+    # Python task costs ~0.28 s of worker start-up (operators/_grouped.py),
+    # so AQE coalesces adjacent partitions into as few tasks as the data
+    # needs; a group never straddles two partitions either way
     shuffle_cols = ["__key", "__block"] if skew_split else ["__key"]
-    part = prepared.repartition(nparts, *shuffle_cols).sortWithinPartitions(
+    part = prepared.repartition(*shuffle_cols).sortWithinPartitions(
         "__key", "__block", *[f"__o{i}" for i in range(n_sort)]
     )
     return part.mapInPandas(encode_stream, schema)
