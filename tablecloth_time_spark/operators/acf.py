@@ -242,7 +242,7 @@ def pacf(
                     phi[k, j] = phi[k - 1, j] - phi[k, k] * phi[k - 1, k - j]
                 out[k - 1] = phi[k, k]
         res = g[[*keys, "lag"]].copy()
-        res["pacf"] = [None if not np.isfinite(v) else float(v) for v in out]
+        res["pacf"] = np.where(np.isfinite(out), out, np.nan)  # NaN -> null
         return res
 
     return grouped_apply_stream(acf_df, keys, ["lag"], kernel, schema)

@@ -9,6 +9,14 @@ state: ``applyInPandasWithState`` keeps one small state blob per key in
 the state store (checkpointed, exactly-once with the sink contract) and
 hands each micro-batch's rows for that key to a vectorized pandas kernel.
 
+Every operator here is one call to :func:`_fold`, the single carried-state
+primitive: it concatenates a key's micro-batch rows, stable-sorts them,
+hands them with the key's carried state to the operator's vectorized
+``step``, stores the state ``step`` returns and emits its frame behind the
+key column. It is the one place a streaming micro-batch crosses into
+Python. An operator is its argument checks, its ``base`` projection, its
+output and state fields, and its ``step``.
+
 ``streaming_counter_rate`` is the batch ``operators/counters.counter_rate``
 re-expressed for streams: state = (last_ts_ms, last_value) — constant
 size per key, unbounded keys bounded only by key cardinality (NOT by
@@ -23,6 +31,8 @@ silently differenced against the wrong predecessor).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -31,6 +41,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
+    DataType,
     DoubleType,
     IntegerType,
     LongType,
@@ -40,6 +51,53 @@ from pyspark.sql.types import (
 )
 
 from tablecloth_time_spark.functions.timeops import to_epoch_millis
+from tablecloth_time_spark.functions.units import milliseconds_in, normalize_unit
+
+
+def _fold(
+    base: DataFrame,
+    key_col: str,
+    sort_col: str | None,
+    out_fields: list[tuple[str, DataType]],
+    state_fields: list[tuple[str, DataType]],
+    step: Callable[
+        [pd.DataFrame, tuple | None], tuple[tuple | None, pd.DataFrame | None]
+    ],
+) -> DataFrame:
+    """Per-key carried-state fold over a stream, append mode, no timeout.
+
+    Per key and micro-batch, ``step(pdf, state)`` gets the key's rows
+    stable-sorted by ``sort_col`` (``None`` keeps arrival order) and the
+    key's state tuple (``None`` for a key never seen). It returns
+    ``(new_state, out)``: a non-None ``new_state`` replaces the carried
+    state (``None`` leaves it as it was, or absent); a non-None ``out`` is
+    emitted with the key column prepended. The output schema is the key
+    field of ``base.schema`` followed by ``out_fields``.
+    """
+
+    def struct(fields: list[tuple[str, DataType]]) -> StructType:
+        return StructType([StructField(n, t) for n, t in fields])
+
+    def kernel(key, pdfs, state: GroupState):
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        if not len(pdf):
+            return
+        if sort_col is not None:
+            pdf = pdf.sort_values(sort_col, kind="stable")
+        new_state, out = step(pdf, state.get if state.exists else None)
+        if new_state is not None:
+            state.update(new_state)
+        if out is not None:
+            out.insert(0, key_col, pdf[key_col].iloc[0])
+            yield out
+
+    return base.groupBy(key_col).applyInPandasWithState(
+        kernel,
+        struct([(key_col, base.schema[key_col].dataType), *out_fields]),
+        struct(state_fields),
+        "append",
+        GroupStateTimeout.NoTimeout,
+    )
 
 
 def _effective_prev(
@@ -86,32 +144,11 @@ def streaming_counter_rate(
     delta/rate. Semantics match batch ``counter_rate`` when samples arrive
     in order (pinned by tests/test_streaming.py).
     """
-    key_field = stream.schema[key_col]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField("ts_ms", LongType()),
-            StructField("value", DoubleType()),
-            StructField("delta", DoubleType()),
-            StructField("rate_per_s", DoubleType()),
-            StructField("out_of_order", BooleanType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("last_ms", LongType()), StructField("last_v", DoubleType())]
-    )
 
-    def kernel(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        pdf = pdf.sort_values("ts_ms", kind="stable")
+    def step(pdf, state):
         ms = pdf["ts_ms"].to_numpy(dtype=np.int64)
         v = pdf["value"].to_numpy(dtype=np.float64)
-        if state.exists:
-            last_ms, last_v = state.get
-        else:
-            last_ms, last_v = None, None
+        last_ms, last_v = state if state is not None else (None, None)
 
         prev_ms, has_prev, use_state = _effective_prev(ms, last_ms)
         prev_v = np.roll(v, 1)
@@ -137,11 +174,9 @@ def streaming_counter_rate(
         # timestamp must not overwrite last_v with the replayed value —
         # the first delivery's value stays the predecessor (ties keep
         # existing state).
-        if last_ms is None or int(ms[-1]) > last_ms:
-            state.update((int(ms[-1]), float(v[-1])))
-        yield pd.DataFrame(
+        advance = last_ms is None or int(ms[-1]) > last_ms
+        out = pd.DataFrame(
             {
-                key_col: pdf[key_col].to_numpy(),
                 "ts_ms": ms,
                 "value": v,
                 "delta": delta,
@@ -149,18 +184,20 @@ def streaming_counter_rate(
                 "out_of_order": ooo,
             }
         )
+        return ((int(ms[-1]), float(v[-1])) if advance else None), out
 
     base = stream.select(
         key_col,
         to_epoch_millis(ts_col).alias("ts_ms"),
         F.col(value_col).cast("double").alias("value"),
     )
-    return base.groupBy(key_col).applyInPandasWithState(
-        kernel,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _fold(
+        base, key_col, "ts_ms",
+        [("ts_ms", LongType()), ("value", DoubleType()),
+         ("delta", DoubleType()), ("rate_per_s", DoubleType()),
+         ("out_of_order", BooleanType())],
+        [("last_ms", LongType()), ("last_v", DoubleType())],
+        step,
     )
 
 
@@ -205,26 +242,8 @@ def streaming_cusum(
 
     Output (append): key, ts_ms, value, cusum_pos, cusum_neg, is_drift.
     """
-    key_field = stream.schema[key_col]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField("ts_ms", LongType()),
-            StructField("value", DoubleType()),
-            StructField("cusum_pos", DoubleType()),
-            StructField("cusum_neg", DoubleType()),
-            StructField("is_drift", BooleanType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("sp", DoubleType()), StructField("sn", DoubleType())]
-    )
 
-    def kernel(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        pdf = pdf.sort_values("ts_ms", kind="stable")
+    def step(pdf, state):
         v = pdf["value"].to_numpy(dtype=np.float64)
         mu = pdf["__mu"].to_numpy(dtype=np.float64)
         sd = pdf["__sd"].to_numpy(dtype=np.float64)
@@ -232,7 +251,6 @@ def streaming_cusum(
         def frame(sp: np.ndarray, sn: np.ndarray) -> pd.DataFrame:
             return pd.DataFrame(
                 {
-                    key_col: pdf[key_col].to_numpy(),
                     "ts_ms": pdf["ts_ms"].to_numpy(dtype=np.int64),
                     "value": v,
                     "cusum_pos": sp,
@@ -259,16 +277,16 @@ def streaming_cusum(
 
         # batch parity for series HEADS: before the key's first valid
         # sample the batch window sum is over all-null terms -> NULL
-        # score. State absent == "no valid sample seen yet".
-        if state.exists:
-            sp0, sn0 = state.get
+        # score. State absent == "no valid sample seen yet", so a head
+        # batch with no valid sample emits nulls and creates no state.
+        if state is not None:
+            sp0, sn0 = state
             start = 0
         else:
             valid_idx = np.flatnonzero(~nan_z)
             if not len(valid_idx):
                 nulls = np.full(len(v), np.nan)
-                yield frame(nulls, nulls)
-                return
+                return None, frame(nulls, nulls)
             sp0, sn0 = 0.0, 0.0
             start = int(valid_idx[0])
 
@@ -281,13 +299,13 @@ def streaming_cusum(
         sn = np.full(len(v), np.nan)
         sp[start:] = one_sided(xp[start:], sp0)
         sn[start:] = one_sided(xn[start:], sn0)
-        state.update((float(sp[-1]), float(sn[-1])))
+        new_state = (float(sp[-1]), float(sn[-1]))
         # emit null (not carried) scores on invalid-sd rows — the
-        # documented contract; the state update above already took the
+        # documented contract; the new state above already took the
         # pass-through trajectory value
         sp = np.where(bad_sd, np.nan, sp)
         sn = np.where(bad_sd, np.nan, sn)
-        yield frame(sp, sn)
+        return new_state, frame(sp, sn)
 
     base = stream.select(
         key_col,
@@ -296,12 +314,13 @@ def streaming_cusum(
         F.col(mu_col).cast("double").alias("__mu"),
         F.col(sd_col).cast("double").alias("__sd"),
     )
-    return base.groupBy(key_col).applyInPandasWithState(
-        kernel,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _fold(
+        base, key_col, "ts_ms",
+        [("ts_ms", LongType()), ("value", DoubleType()),
+         ("cusum_pos", DoubleType()), ("cusum_neg", DoubleType()),
+         ("is_drift", BooleanType())],
+        [("sp", DoubleType()), ("sn", DoubleType())],
+        step,
     )
 
 
@@ -335,31 +354,11 @@ def streaming_detect_gaps(
     when it closes, which is what a gap-FILL pipeline needs (only closed
     gaps are fillable).
     """
-    from tablecloth_time_spark.functions.units import (
-        milliseconds_in,
-        normalize_unit,
-    )
-
     thresh_ms = threshold * milliseconds_in(normalize_unit(unit))
-    key_field = stream.schema[key_col]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField("gap_start_ms", LongType()),
-            StructField("gap_end_ms", LongType()),
-            StructField("gap_s", DoubleType()),
-            StructField("out_of_order", BooleanType()),
-        ]
-    )
-    state_schema = StructType([StructField("last_ms", LongType())])
 
-    def kernel(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        pdf = pdf.sort_values("ts_ms", kind="stable")
+    def step(pdf, state):
         ms = pdf["ts_ms"].to_numpy(dtype=np.int64)
-        last_ms = state.get[0] if state.exists else None
+        last_ms = state[0] if state is not None else None
 
         prev_ms, has_prev, _ = _effective_prev(ms, last_ms)
         ooo = has_prev & (ms < prev_ms)
@@ -368,13 +367,12 @@ def streaming_detect_gaps(
 
         # strict >: an exact-timestamp replay keeps the existing state
         # (same tie rule as streaming_counter_rate)
-        if last_ms is None or int(ms[-1]) > last_ms:
-            state.update((int(ms[-1]),))
+        advance = last_ms is None or int(ms[-1]) > last_ms
+        new_state = (int(ms[-1]),) if advance else None
         if not emit.any():
-            return
-        yield pd.DataFrame(
+            return new_state, None
+        return new_state, pd.DataFrame(
             {
-                key_col: pdf[key_col].to_numpy()[emit],
                 "gap_start_ms": prev_ms[emit].astype(np.int64),
                 "gap_end_ms": ms[emit],
                 "gap_s": np.where(
@@ -387,12 +385,12 @@ def streaming_detect_gaps(
     base = stream.select(
         key_col, to_epoch_millis(ts_col).alias("ts_ms")
     )
-    return base.groupBy(key_col).applyInPandasWithState(
-        kernel,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _fold(
+        base, key_col, "ts_ms",
+        [("gap_start_ms", LongType()), ("gap_end_ms", LongType()),
+         ("gap_s", DoubleType()), ("out_of_order", BooleanType())],
+        [("last_ms", LongType())],
+        step,
     )
 
 
@@ -426,11 +424,6 @@ def streaming_funnel(
     emitted row per key always equals the batch ``funnel`` verdict on
     the same closed input (pinned by tests).
     """
-    from tablecloth_time_spark.functions.units import (
-        milliseconds_in,
-        normalize_unit,
-    )
-
     if len(steps) < 2:
         raise ValueError(f"funnel needs >= 2 steps, got {steps!r}")
     if len(set(steps)) != len(steps):
@@ -442,33 +435,11 @@ def streaming_funnel(
         else None
     )
 
-    key_field = stream.schema[key_col]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField("steps_completed", IntegerType()),
-            StructField("step_ts_ms", ArrayType(LongType())),
-            StructField("converted", BooleanType()),
-        ]
-    )
-    # stage + k completed-step times (null past the stage)
-    state_schema = StructType(
-        [StructField("stage", IntegerType())]
-        + [StructField(f"t{i}", LongType()) for i in range(1, k + 1)]
-    )
-
-    def kernel(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        pdf = pdf.sort_values("ts_ms", kind="stable")
+    def step(pdf, state):
         ms = pdf["ts_ms"].to_numpy(dtype=np.int64)
         st = pdf["step"].to_numpy()
-
-        if state.exists:
-            got = state.get
-            stage = int(got[0])
-            times = [got[i] for i in range(1, k + 1)]
+        if state is not None:
+            stage, times = int(state[0]), list(state[1:])
         else:
             stage, times = 0, [None] * k
 
@@ -487,18 +458,14 @@ def streaming_funnel(
             stage += 1
             advanced = True
 
+        # emit (and write state) only on an advance
         if not advanced:
-            return
-        state.update(
-            (stage, *[None if t is None else int(t) for t in times])
-        )
-        yield pd.DataFrame(
+            return None, None
+        times = [None if t is None else int(t) for t in times]
+        return (stage, *times), pd.DataFrame(
             {
-                key_col: [pdf[key_col].iloc[0]],
                 "steps_completed": np.array([stage], dtype="int32"),
-                "step_ts_ms": [
-                    [None if t is None else int(t) for t in times]
-                ],
+                "step_ts_ms": [times],
                 "converted": [stage == k],
             }
         )
@@ -508,12 +475,15 @@ def streaming_funnel(
         to_epoch_millis(ts_col).alias("ts_ms"),
         F.col(step_col).alias("step"),
     )
-    return base.groupBy(key_col).applyInPandasWithState(
-        kernel,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _fold(
+        base, key_col, "ts_ms",
+        [("steps_completed", IntegerType()),
+         ("step_ts_ms", ArrayType(LongType())),
+         ("converted", BooleanType())],
+        # stage + k completed-step times (null past the stage)
+        [("stage", IntegerType())]
+        + [(f"t{i}", LongType()) for i in range(1, k + 1)],
+        step,
     )
 
 
@@ -552,36 +522,10 @@ def streaming_ewma(
     Output (append): key, ts_ms, value, ewma. In-order contract across
     micro-batches (the ``streaming_counter_rate`` contract).
     """
-    from tablecloth_time_spark.functions.units import (
-        milliseconds_in,
-        normalize_unit,
-    )
-
     halflife_ms = int(halflife * milliseconds_in(normalize_unit(unit)))
     seg_ms = 512 * halflife_ms
 
-    key_field = stream.schema[key_col]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField("ts_ms", LongType()),
-            StructField("value", DoubleType()),
-            StructField("ewma", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("last_seg", LongType()),
-            StructField("a_num", DoubleType()),
-            StructField("a_den", DoubleType()),
-        ]
-    )
-
-    def kernel(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        pdf = pdf.sort_values("ts_ms", kind="stable")
+    def step(pdf, state):
         ms = pdf["ts_ms"].to_numpy(dtype=np.int64)
         v = pdf["value"].to_numpy(dtype=np.float64)
 
@@ -607,40 +551,31 @@ def streaming_ewma(
 
         # carry chain across the batch's segments (loop over SEGMENTS)
         segs = seg[starts]
-        if state.exists:
-            last_seg, a_num, a_den = state.get
-        else:
-            last_seg, a_num, a_den = None, 0.0, 0.0
+        last_seg, a_num, a_den = state if state is not None else (None, 0.0, 0.0)
         carry_x = np.empty(len(starts))
         carry_d = np.empty(len(starts))
         cx, cd, prev_seg = a_num, a_den, last_seg
-        for k, s in enumerate(segs):
+        for i, s in enumerate(segs):
             if prev_seg is not None:
                 f = 2.0 ** (-512.0 * float(s - prev_seg))
                 cx, cd = cx * f, cd * f
             else:
                 cx, cd = 0.0, 0.0
-            carry_x[k], carry_d[k] = cx, cd
+            carry_x[i], carry_d[i] = cx, cd
             # close this segment into the carry for the next one
-            end = starts[k + 1] - 1 if k + 1 < len(starts) else len(ms) - 1
+            end = starts[i + 1] - 1 if i + 1 < len(starts) else len(ms) - 1
             cx, cd = cx + px[end], cd + pd_[end]
             prev_seg = s
-        row_cx = np.repeat(carry_x, np.diff(np.append(starts, len(ms))))
-        row_cd = np.repeat(carry_d, np.diff(np.append(starts, len(ms))))
+        row_cx = np.repeat(carry_x, np.diff(bounds))
+        row_cd = np.repeat(carry_d, np.diff(bounds))
 
         num = row_cx + px
         den = row_cd + pd_
         with np.errstate(divide="ignore", invalid="ignore"):
             ewma = np.where(den > 0, num / den, np.nan)
 
-        state.update((int(segs[-1]), float(cx), float(cd)))
-        yield pd.DataFrame(
-            {
-                key_col: pdf[key_col].to_numpy(),
-                "ts_ms": ms,
-                "value": v,
-                "ewma": ewma,
-            }
+        return (int(segs[-1]), float(cx), float(cd)), pd.DataFrame(
+            {"ts_ms": ms, "value": v, "ewma": ewma}
         )
 
     base = stream.select(
@@ -648,12 +583,13 @@ def streaming_ewma(
         to_epoch_millis(ts_col).alias("ts_ms"),
         F.col(value_col).cast("double").alias("value"),
     )
-    return base.groupBy(key_col).applyInPandasWithState(
-        kernel,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _fold(
+        base, key_col, "ts_ms",
+        [("ts_ms", LongType()), ("value", DoubleType()),
+         ("ewma", DoubleType())],
+        [("last_seg", LongType()), ("a_num", DoubleType()),
+         ("a_den", DoubleType())],
+        step,
     )
 
 
@@ -698,29 +634,13 @@ def streaming_budget_prefix(
         raise ValueError(
             f"streaming_budget_prefix: budget must be > 0, got {budget}"
         )
-    key_field = stream.schema[key_col]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField("pos", LongType()),
-            StructField("cum_cost", DoubleType()),
-            StructField("out_of_order", BooleanType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("last_pos", LongType()), StructField("cum", DoubleType())]
-    )
 
-    def kernel(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        pdf = pdf.sort_values("pos", kind="stable")
+    def step(pdf, state):
         pos = pdf["pos"].to_numpy(dtype=np.int64)
         cost = pdf["cost"].to_numpy(dtype=np.float64)
         cost = np.where(np.isnan(cost), 0.0, cost)  # null costs count 0
 
-        last_pos, cum = state.get if state.exists else (None, 0.0)
+        last_pos, cum = state if state is not None else (None, 0.0)
         # late = at/below the carried position, or a duplicate of an
         # earlier in-batch position (sorted, so a dup == its neighbor)
         ooo = np.zeros(len(pos), dtype=bool)
@@ -734,24 +654,20 @@ def streaming_budget_prefix(
         run = cum + np.cumsum(np.where(valid, cost, 0))
         keep = valid & (run <= budget)
 
+        new_state = None
         if valid.any():
             new_last = int(pos[valid].max())
-            state.update(
-                (
-                    new_last if last_pos is None else max(last_pos, new_last),
-                    float(cum + cost[valid].sum()),
-                )
+            new_state = (
+                new_last if last_pos is None else max(last_pos, new_last),
+                float(cum + cost[valid].sum()),
             )
         emit = keep | ooo
         if not emit.any():
-            return
-        cum_out = pd.Series(run[emit], dtype="float64")
-        cum_out[pd.Series(ooo[emit]).to_numpy()] = np.nan  # late: unknown
-        yield pd.DataFrame(
+            return new_state, None
+        return new_state, pd.DataFrame(
             {
-                key_col: pdf[key_col].to_numpy()[emit],
                 "pos": pos[emit],
-                "cum_cost": cum_out,
+                "cum_cost": np.where(ooo[emit], np.nan, run[emit]),  # late: unknown
                 "out_of_order": ooo[emit],
             }
         )
@@ -761,12 +677,12 @@ def streaming_budget_prefix(
         F.col(pos_col).cast("long").alias("pos"),
         F.col(cost_col).cast("double").alias("cost"),
     )
-    return base.groupBy(key_col).applyInPandasWithState(
-        kernel,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _fold(
+        base, key_col, "pos",
+        [("pos", LongType()), ("cum_cost", DoubleType()),
+         ("out_of_order", BooleanType())],
+        [("last_pos", LongType()), ("cum", DoubleType())],
+        step,
     )
 
 
@@ -797,39 +713,12 @@ def streaming_type_entropy(
     carried as strings; NULL categories count as a category of their
     own, exactly as in batch.
     """
-    from pyspark.sql.types import StringType
 
-    key_field = stream.schema[key_col]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField("n_rows", LongType()),
-            StructField("n_distinct", IntegerType()),
-            StructField("entropy_bits", DoubleType()),
-            StructField("norm_entropy", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("cats", ArrayType(StringType())),
-            StructField("counts", ArrayType(LongType())),
-        ]
-    )
-
-    def kernel(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        vc = pdf["cat"].value_counts(dropna=False)
-        if state.exists:
-            cats, counts = state.get
-            d = dict(zip(cats, counts))
-        else:
-            d = {}
-        for cat, c in vc.items():
+    def step(pdf, state):
+        d = dict(zip(*state)) if state is not None else {}
+        for cat, c in pdf["cat"].value_counts(dropna=False).items():
             ck = None if pd.isna(cat) else str(cat)
             d[ck] = d.get(ck, 0) + int(c)
-        state.update((list(d.keys()), list(d.values())))
 
         # deterministic float order: NULL category first, then sorted
         items = sorted(d.items(), key=lambda kv: (kv[0] is not None, kv[0] or ""))
@@ -838,9 +727,8 @@ def streaming_type_entropy(
         k = len(c_arr)
         ent = float(np.log2(n) - (c_arr * np.log2(c_arr)).sum() / n)
         norm = float(ent / np.log2(k)) if k > 1 else 0.0
-        yield pd.DataFrame(
+        return (list(d.keys()), list(d.values())), pd.DataFrame(
             {
-                key_col: [pdf[key_col].iloc[0]],
                 "n_rows": np.array([int(n)], dtype="int64"),
                 "n_distinct": np.array([k], dtype="int32"),
                 "entropy_bits": [ent],
@@ -851,12 +739,12 @@ def streaming_type_entropy(
     base = stream.select(
         key_col, F.col(cat_col).cast("string").alias("cat")
     )
-    return base.groupBy(key_col).applyInPandasWithState(
-        kernel,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _fold(
+        base, key_col, None,
+        [("n_rows", LongType()), ("n_distinct", IntegerType()),
+         ("entropy_bits", DoubleType()), ("norm_entropy", DoubleType())],
+        [("cats", ArrayType(StringType())), ("counts", ArrayType(LongType()))],
+        step,
     )
 
 
@@ -886,51 +774,20 @@ def streaming_sortedness(
     (nullable prev-ms + has-prev), so 10^9 live keys fit comfortably in
     executor state stores.
     """
-    key_field = stream.schema[key_col]
-    order_field = stream.schema[order_col]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField(order_col, order_field.dataType),
-            StructField("ts_ms", LongType()),
-            StructField("is_null", BooleanType()),
-            StructField("is_violation", BooleanType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("prev_ms", LongType()),
-            StructField("has_prev", BooleanType()),
-        ]
-    )
 
-    def kernel(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        pdf = pdf.sort_values(order_col, kind="stable")
+    def step(pdf, state):
         ms = pdf["ts_ms"].to_numpy(dtype="float64")  # NULL -> NaN
         prev = np.roll(ms, 1)
-        if state.exists:
-            prev_ms, has_prev = state.get
-            prev[0] = float(prev_ms) if (has_prev and prev_ms is not None) else np.nan
-        else:
-            prev[0] = np.nan
+        prev_ms, has_prev = state if state is not None else (None, False)
+        prev[0] = float(prev_ms) if (has_prev and prev_ms is not None) else np.nan
         is_null = np.isnan(ms)
         with np.errstate(invalid="ignore"):
             viol = ~is_null & ~np.isnan(prev) & (ms < prev)
         last = ms[-1]
-        state.update(
-            (None if np.isnan(last) else int(last), True)
-        )
-        out_ms = pd.array(
-            [None if np.isnan(x) else int(x) for x in ms], dtype="Int64"
-        )
-        yield pd.DataFrame(
+        return (None if np.isnan(last) else int(last), True), pd.DataFrame(
             {
-                key_col: pdf[key_col].to_numpy(),
                 order_col: pdf[order_col].to_numpy(),
-                "ts_ms": out_ms,
+                "ts_ms": pd.array(ms, dtype="Float64").astype("Int64"),
                 "is_null": is_null,
                 "is_violation": viol,
             }
@@ -941,12 +798,13 @@ def streaming_sortedness(
         order_col,
         to_epoch_millis(ts_col).alias("ts_ms"),
     )
-    return base.groupBy(key_col).applyInPandasWithState(
-        kernel,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _fold(
+        base, key_col, order_col,
+        [(order_col, base.schema[order_col].dataType),
+         ("ts_ms", LongType()), ("is_null", BooleanType()),
+         ("is_violation", BooleanType())],
+        [("prev_ms", LongType()), ("has_prev", BooleanType())],
+        step,
     )
 
 
@@ -972,45 +830,12 @@ def streaming_alternation_runs(
     keeps the whole profile at ~60 bytes/key, so 10^9 live conversations
     fit executor state stores.
     """
-    key_field = stream.schema[key_col]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField("n_turns", LongType()),
-            StructField("n_runs", LongType()),
-            StructField("max_run_len", LongType()),
-            StructField("mean_run_len", DoubleType()),
-            StructField("alternation_ratio", DoubleType()),
-            StructField("longest_run_role", StringType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("has_prev", BooleanType()),
-            StructField("prev_role", StringType()),
-            StructField("n_turns", LongType()),
-            StructField("n_runs", LongType()),
-            StructField("cur_len", LongType()),
-            StructField("best_len", LongType()),
-            StructField("best_role", StringType()),
-        ]
-    )
 
-    def kernel(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        pdf = pdf.sort_values(order_col, kind="stable")
-        roles = pdf["role"].to_numpy(dtype=object)
-        if state.exists:
-            has_prev, prev_role, n_turns, n_runs, cur_len, best_len, best_role = (
-                state.get
-            )
-        else:
-            has_prev, prev_role = False, None
-            n_turns = n_runs = cur_len = best_len = 0
-            best_role = None
-        for r in roles:
+    def step(pdf, state):
+        has_prev, prev_role, n_turns, n_runs, cur_len, best_len, best_role = (
+            state if state is not None else (False, None, 0, 0, 0, 0, None)
+        )
+        for r in pdf["role"].to_numpy(dtype=object):
             r = None if pd.isna(r) else r
             n_turns += 1
             if has_prev and r == prev_role:
@@ -1021,13 +846,10 @@ def streaming_alternation_runs(
             if cur_len > best_len:
                 best_len, best_role = cur_len, r
             has_prev, prev_role = True, r
-        state.update(
-            (has_prev, prev_role, int(n_turns), int(n_runs), int(cur_len),
-             int(best_len), best_role)
-        )
-        yield pd.DataFrame(
+        new_state = (has_prev, prev_role, int(n_turns), int(n_runs),
+                     int(cur_len), int(best_len), best_role)
+        return new_state, pd.DataFrame(
             {
-                key_col: [pdf[key_col].iloc[0]],
                 "n_turns": np.array([n_turns], dtype="int64"),
                 "n_runs": np.array([n_runs], dtype="int64"),
                 "max_run_len": np.array([best_len], dtype="int64"),
@@ -1042,10 +864,15 @@ def streaming_alternation_runs(
     base = stream.select(
         key_col, order_col, F.col(role_col).cast("string").alias("role")
     )
-    return base.groupBy(key_col).applyInPandasWithState(
-        kernel,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _fold(
+        base, key_col, order_col,
+        [("n_turns", LongType()), ("n_runs", LongType()),
+         ("max_run_len", LongType()), ("mean_run_len", DoubleType()),
+         ("alternation_ratio", DoubleType()),
+         ("longest_run_role", StringType())],
+        [("has_prev", BooleanType()), ("prev_role", StringType()),
+         ("n_turns", LongType()), ("n_runs", LongType()),
+         ("cur_len", LongType()), ("best_len", LongType()),
+         ("best_role", StringType())],
+        step,
     )

@@ -46,3 +46,12 @@ def assert_frames_equal(spark_df, pandas_df, sort_cols, check_dtype=False):
     left = left[sorted(left.columns)]
     right = right[sorted(right.columns)]
     pd.testing.assert_frame_equal(left, right, check_dtype=check_dtype)
+
+
+def await_done(q, timeout=300):
+    """Wait for streaming query ``q`` to finish. If it is still running
+    after ``timeout`` seconds, stop it and fail with a timeout message,
+    so a stuck query is reported as such rather than as a data diff."""
+    if not q.awaitTermination(timeout):
+        q.stop()
+        pytest.fail(f"streaming query did not finish in {timeout} s")

@@ -21,6 +21,7 @@ from tablecloth_time_spark.operators.transcripts import role_ngrams
 from tablecloth_time_spark.sources.transcripts import (
     generate_transcripts_pandas,
 )
+from tests.conftest import await_done
 
 
 @pytest.fixture(scope="module")
@@ -241,7 +242,7 @@ def test_streaming_type_entropy_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_done(q)
 
     got_all = spark.read.parquet(sink).toPandas()
     # per key: the row with the largest n_rows is the final state
